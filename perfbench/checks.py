@@ -1,8 +1,10 @@
 """Correctness checks, run outside every timed region.
 
-- backfill gold against the DuckDB oracle (``gold_oracle_sql`` from
-  ``tests/weather_oracle.py``, loaded read-only) for a seed-chosen sample of
-  postal codes;
+- gold against the DuckDB oracle (``gold_oracle_sql`` from
+  ``tests/weather_oracle.py``, loaded read-only) for a sample of postal
+  codes, row for row with duplicates counted, after the backfill and again
+  after the last upsert;
+- GOLD_KEYS unique over the whole gold table;
 - API responses against a DuckDB snapshot of the gold files the app serves.
 
 DuckDB reads the parquet files directly, so neither check goes through the
@@ -15,6 +17,7 @@ import datetime as dt
 import importlib.util
 import math
 import os
+from collections import Counter
 
 import duckdb
 
@@ -70,7 +73,10 @@ def gold_vs_oracle(
     repo_root: str, bronze_root: str, gold_path: str, postal_codes: list[str],
     asof: dt.datetime, obs_lookback: int, fcst_lookback: int,
 ) -> list[str]:
-    """Mismatch descriptions (empty when gold matches the oracle)."""
+    """Mismatch descriptions (empty when gold matches the oracle).
+
+    Rows are compared as multisets, so a duplicated gold row is a
+    mismatch."""
     oracle = _oracle_module(repo_root)
     con = duckdb.connect()
     try:
@@ -81,14 +87,14 @@ def gold_vs_oracle(
             where = f" WHERE postal_code IN ({pcs})" if t == "postal_codes" else ""
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM {src}{where}")
         cols = ", ".join(ORACLE_COLS)
-        want = set()
+        want = Counter()
         for data_type, lb in (("observation", obs_lookback), ("forecast", fcst_lookback)):
             sql = oracle.gold_oracle_sql(data_type, asof, lb)
-            want |= {tuple(map(_norm, r)) for r in
-                     con.execute(f"SELECT {cols} FROM ({sql})").fetchall()}
-        got = {tuple(map(_norm, r)) for r in con.execute(
+            want.update(tuple(map(_norm, r)) for r in
+                        con.execute(f"SELECT {cols} FROM ({sql})").fetchall())
+        got = Counter(tuple(map(_norm, r)) for r in con.execute(
             f"SELECT {cols} FROM {_scan(gold_path)} WHERE postal_code IN ({pcs})"
-        ).fetchall()}
+        ).fetchall())
     finally:
         con.close()
     out = []
@@ -99,6 +105,21 @@ def gold_vs_oracle(
     for r in sorted(got - want, key=repr)[:5]:
         out.append(f"unexpected in gold: {r}")
     return out
+
+
+def duplicate_keys(gold_path: str, keys: list[str]) -> list[str]:
+    """Key tuples that occur more than once in gold (NULLs compare equal,
+    as in the merge's key match)."""
+    con = duckdb.connect()
+    try:
+        con.execute("SET threads TO 2")
+        cols = ", ".join(keys)
+        dups = con.execute(
+            f"SELECT {cols}, count(*) FROM {_scan(gold_path)} GROUP BY ALL "
+            f"HAVING count(*) > 1 ORDER BY ALL LIMIT 5").fetchall()
+    finally:
+        con.close()
+    return [f"gold key {r[:-1]} occurs {r[-1]} times" for r in dups]
 
 
 class GoldSnapshot:

@@ -35,14 +35,14 @@ UNITS = {"setup_s": "s", "latency_p50_ms": "ms", "gold_bytes_per_row": "B",
          "peak_rss_mb": "MB"}
 
 
-def _driver_memory() -> str:
+def _driver_memory_mb() -> int:
     """1 GiB, or a quarter of host memory when that is smaller."""
     try:
         with open("/proc/meminfo") as f:
             total_kb = int(f.readline().split()[1])
     except (OSError, ValueError, IndexError):
-        return "1g"
-    return f"{max(512, min(1024, total_kb // 4096))}m"
+        return 1024
+    return max(512, min(1024, total_kb // 4096))
 
 
 def _configure_env(work: str) -> int:
@@ -50,35 +50,44 @@ def _configure_env(work: str) -> int:
     tmp = os.path.join(work, "tmp")
     os.makedirs(tmp, exist_ok=True)
     os.environ["SPARK_GRAFT_CPUS"] = str(cpus)
-    os.environ["SPARK_DRIVER_MEMORY"] = _driver_memory()
+    os.environ["SPARK_DRIVER_MEMORY"] = f"{_driver_memory_mb()}m"
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(work, "spark-local")
     os.environ["TMPDIR"] = tmp
     os.environ.pop("PYSPARK_SUBMIT_ARGS", None)
     return cpus
 
 
-def _start_spark(work: str):
+def _start_spark(work: str, trace: bool):
     from weather_data_pipeline_sv_spark.session import get_spark
 
     tmp = os.path.join(work, "tmp")
-    spark = get_spark(
-        app_name="perfbench",
-        extra_conf={
-            "spark.ui.showConsoleProgress": "false",
-            "spark.local.dir": os.path.join(work, "spark-local"),
-            "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
-            # a heap committed and touched up front: peak RSS then
-            # measures what runs add beyond it, not heap-growth timing
-            "spark.driver.extraJavaOptions":
-                f"-Xms{os.environ['SPARK_DRIVER_MEMORY']} -XX:+AlwaysPreTouch "
-                f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData -Dderby.system.home={tmp}",
-            # the traced run reads every job of the run back from the
-            # status store
+    heap_mb = _driver_memory_mb()
+    conf = {
+        "spark.ui.showConsoleProgress": "false",
+        "spark.local.dir": os.path.join(work, "spark-local"),
+        "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
+        # Heap and young generation of fixed size, and a fixed threshold
+        # for concurrent marking: G1 then sizes nothing from measured pause
+        # times, which a busy host stretches.  The heap is not touched up
+        # front, so peak RSS counts only the pages the run used.
+        # TieredStopAtLevel=1 compiles with C1 only: in a run this short,
+        # C2 compiles for the whole run and takes most of a core from the
+        # timed work at random moments (WORKLOADS.md, "Host sizing").  C1
+        # alone shrinks the default code cache to 48 MB, which Spark's
+        # generated code fills ("Out of space in CodeCache", then HTTP 500s),
+        # so the cache keeps the tiered default of 240 MB.
+        "spark.driver.extraJavaOptions":
+            f"-Xms{heap_mb}m -Xmn{heap_mb // 4}m -XX:-G1UseAdaptiveIHOP "
+            f"-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m "
+            f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData -Dderby.system.home={tmp}",
+    }
+    if trace:  # the traced run reads every job of the run back from the status store
+        conf.update({
             "spark.ui.retainedJobs": "100000",
             "spark.ui.retainedStages": "100000",
             "spark.sql.ui.retainedExecutions": "100000",
-        },
-    )
+        })
+    spark = get_spark(app_name="perfbench", extra_conf=conf)
     spark.sparkContext.setLogLevel("ERROR")
     return spark
 
@@ -129,7 +138,7 @@ def main(argv: list[str] | None = None) -> int:
     spark = None
     try:
         t0 = time.perf_counter()
-        spark = _start_spark(work)
+        spark = _start_spark(work, bool(args.trace))
         session_s = time.perf_counter() - t0
         ctx = wl.Ctx(spark=spark, repo_root=root, work=work, seed=args.seed,
                      seconds=args.seconds, trace=bool(args.trace), cpus=cpus,
@@ -170,6 +179,8 @@ def main(argv: list[str] | None = None) -> int:
     if args.trace:
         layer = {k: 0.0 for k in wl.PER_LAYER}  # layers this workload bypasses read 0
         layer["session.start_s"] = session_s
+        layer["sources.writers.backfill_write_s"] = \
+            ctx.tracer.self_seconds()["sources.writers.backfill"]
         layer.update(res.layer)
         metrics = {k: {"value": layer[k], "unit": wl.PER_LAYER[k]} for k in wl.PER_LAYER}
     else:

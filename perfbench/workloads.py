@@ -4,7 +4,7 @@ Both start from the same set-up: seeded bronze, a backfill that writes gold
 partitioned by date (checked against the DuckDB oracle, untimed), and one
 hourly upsert that merges into gold -- for ``hourly`` a whole cron run,
 which is also its warm-up.  Then ``hourly`` times further cron runs and
-``api`` times open-loop traffic.
+``api`` times reads by closed-loop callers.
 
 An untraced run measures once.  A traced run measures the same phase
 untraced first and then traced, and reports per-layer metrics from the
@@ -44,25 +44,30 @@ import gen
 from tracing import SparkStatus, Tracer, group_metrics, job_seconds, job_span
 
 # 30 stations x 8 days of hourly history and 150 postal codes: ~9 k bronze
-# rows, ~40 k gold rows in 8 date partitions.  At this size one cron run
-# takes about 10 s on a 4-core host, almost all of it per-job cost, so the
-# set-up plus two timed runs fit the run budget.
+# rows, ~43 k gold rows in 9 date partitions.  At this size one cron run
+# takes 12-15 s on a 4-core host, almost all of it per-job cost, so the
+# set-up, a warm-up run and a timed run fit the run budget.
 SCALE = gen.Scale(stations=30, postal_codes=150, days=8)
 OBS_LOOKBACK_H, FCST_LOOKBACK_H = 168, 48  # the reference transform DAG
 GOLD = "analytics_weather_by_postal_code"
 BRONZE_OBS, BRONZE_FCST = "raw_weather_observations", "raw_weather_forecasts"
-ORACLE_SAMPLE = 8  # postal codes of the backfill checked against the oracle
-SETUP_OPS = 2  # the backfill and the upsert, counted as ops attempted
+ORACLE_SAMPLE = 8  # seed-chosen postal codes whose gold is checked against the oracle
+HOURLY_WARMUP_RUNS = 1  # cron runs in the hourly set-up, before any timing
 
-# api traffic: shares of the route mix; the rest asks for unknown postal
-# codes, whose 404 is the expected answer
+# api traffic (assumptions; WORKLOADS.md gives the evidence for each):
+# shares of the route mix, the rest asks for unknown postal codes, whose
+# 404 is the expected answer; Zipf exponent of postal-code popularity
 ROUTE_MIX = (("postal", 0.40), ("latest", 0.35), ("forecast", 0.20))
-ZIPF_S = 1.1
-API_WARMUP_REQUESTS = 240
-API_WARMUP_OPEN_S = 5.0
-API_REF_RPS = 6.0  # reference rate: latency_p50_ms is measured here
-API_STEP_RPS = (9.0, 12.0)  # further rates tested by the traced run
-API_TAIL_LIMIT_MS = 1000.0  # latency limit on the tail for api.max_rps
+ZIPF_S = 0.8
+API_WARMUP_REQUESTS = 200
+# latency_p50_ms is measured in a closed loop of nproc callers.  The traced
+# run adds open-loop levels at shares of the capacity that closed loop
+# measured, so the rates follow the program's speed instead of being fixed
+# numbers: API_REF_LOAD is the reference rate, API_STEP_LOADS the steps
+# that look for api.max_rps.
+API_REF_LOAD = 0.5
+API_STEP_LOADS = (0.8, 1.0)
+API_TAIL_LIMIT_X = 4.0  # tail limit for api.max_rps, in multiples of the reference p50
 
 
 @dataclass
@@ -78,6 +83,7 @@ class Ctx:
     tracer: Tracer
     status: SparkStatus | None = None
     failures: list[str] = field(default_factory=list)
+    probe_pcs: set[str] = field(default_factory=set)  # postal codes the probes asked for
 
     @property
     def data(self) -> str:
@@ -199,6 +205,7 @@ def _probe(ctx: Ctx, pc: str, hour: int, asof: dt.datetime, tid: str | None) -> 
 
 
 def _verdict(ctx: Ctx, hour: int, pc: str, validation: dict, seen: bool) -> bool:
+    ctx.probe_pcs.add(pc)
     if not validation.get("passed"):
         ctx.failures.append(f"hour {hour}: validation failed: {validation.get('issues')}")
     if not seen:
@@ -273,12 +280,31 @@ def hourly_op_traced(ctx: Ctx, hour: int) -> tuple[float, bool]:
 # -- shared set-up --------------------------------------------------------
 
 
-def build_gold(ctx: Ctx, cron_run: bool) -> tuple[float, int, int]:
+def check_gold(ctx: Ctx, asof: dt.datetime, label: str) -> bool:
+    """Untimed: gold of a seed-chosen sample of postal codes, plus every
+    postal code a probe asked for, against the DuckDB oracle over the
+    whole history as of `asof`, and GOLD_KEYS unique over all of gold.
+    Each hour aggregates only its own bronze rows, so a backfill followed
+    by upserts must equal one transform over everything: a merge that
+    duplicates keys, drops rows of untouched hours or keeps stale values
+    fails here."""
+    hours = int((asof - gen.BASE).total_seconds() // 3600)
+    rng = random.Random(f"{ctx.seed}-oracle")
+    sample = rng.sample([f"1{i:04d}" for i in range(SCALE.postal_codes)], ORACLE_SAMPLE)
+    bad = checks.gold_vs_oracle(ctx.repo_root, os.path.join(ctx.data, "bronze"),
+                                ctx.gold_path, sorted(set(sample) | ctx.probe_pcs),
+                                asof, hours, hours + 24)
+    bad += checks.duplicate_keys(ctx.gold_path, GOLD_KEYS)
+    ctx.failures += [f"{label}: {m}" for m in bad]
+    return not bad
+
+
+def build_gold(ctx: Ctx, cron_runs: int) -> tuple[float, int, int, int]:
     """Bronze, a backfill of the whole history into date-partitioned gold,
-    then one hourly upsert into it: a whole cron run when `cron_run` (the
-    hourly workload's warm-up), else only the transform and the gold
-    upsert.  Returns (set-up seconds without the oracle check, next
-    observation hour, ops failed out of its SETUP_OPS)."""
+    then hourly upserts into it: `cron_runs` whole cron runs (the hourly
+    workload's warm-up), or with 0 a single transform and gold upsert.
+    Returns (set-up seconds without the checks, next observation hour,
+    ops attempted, ops failed)."""
     h0 = SCALE.days * 24 + 1
     t0 = time.perf_counter()
     ctx.gen.write_bronze(ctx.data, h0)
@@ -289,31 +315,35 @@ def build_gold(ctx: Ctx, cron_run: bool) -> tuple[float, int, int]:
                       fcst_lookback_hours=h0 + 24)
     writers.write_table(r.gold, ctx.data, "gold", GOLD, partition_by_date_of="timestamp")
     setup_s = time.perf_counter() - t0
-
-    rng = random.Random(f"{ctx.seed}-oracle")
-    sample = rng.sample([f"1{i:04d}" for i in range(SCALE.postal_codes)], ORACLE_SAMPLE)
-    bad = checks.gold_vs_oracle(ctx.repo_root, os.path.join(ctx.data, "bronze"),
-                                ctx.gold_path, sample, asof, h0, h0 + 24)
-    ctx.failures += [f"backfill gold vs oracle: {m}" for m in bad]
+    if ctx.trace:
+        # the write alone: the backfill's output materialized first, then
+        # written again to scratch storage, so the served gold keeps the
+        # layout of an untraced run
+        gold = _write(r.gold, ctx.scratch("backfill", "stg"))
+        with ctx.tracer.span("sources.writers.backfill", "backfill"):
+            writers.write_table(gold, ctx.scratch("backfill"), "gold", GOLD,
+                                partition_by_date_of="timestamp")
+    failed = int(not check_gold(ctx, asof, "backfill gold vs oracle"))
 
     t0 = time.perf_counter()
-    ok = True
-    if cron_run:
-        _, ok = hourly_op(ctx, h0)
-    else:
+    for hour in range(h0, h0 + cron_runs):
+        failed += int(not hourly_op(ctx, hour)[1])
+    if not cron_runs:
         b = load_bronze(ctx.spark, ctx.data)
         r = run_transform(b[BRONZE_OBS], b[BRONZE_FCST], b["weather_stations"],
                           b["postal_codes"], _hour_ts(h0 + 1))
         _upsert_gold(ctx, r.gold)
     setup_s += time.perf_counter() - t0
-    return setup_s, h0 + 1, int(bool(bad)) + int(not ok)
+    if not cron_runs:  # the hourly workload checks its gold after its last run
+        failed += int(not check_gold(ctx, _hour_ts(h0 + 1), "upserted gold vs oracle"))
+    return setup_s, h0 + max(1, cron_runs), 1 + max(1, cron_runs), failed
 
 
 # -- hourly ---------------------------------------------------------------
 
 
 def run_hourly(ctx: Ctx) -> Result:
-    setup_s, hour, failed = build_gold(ctx, cron_run=True)
+    setup_s, hour, attempted, failed = build_gold(ctx, HOURLY_WARMUP_RUNS)
 
     def measure(op) -> tuple[list[float], int]:
         nonlocal hour
@@ -328,7 +358,9 @@ def run_hourly(ctx: Ctx) -> Result:
 
     lat, bad = measure(hourly_op)
     failed += bad
-    attempted = SETUP_OPS + len(lat)
+    attempted += len(lat)
+    if not ctx.trace:
+        failed += int(not check_gold(ctx, _hour_ts(hour), "gold after the last run vs oracle"))
     p50 = statistics.median(lat)
     lines = [f"freshness_p50_s: {p50:.3f} s ({len(lat)} hourly runs)"]
     tail = percentile_tail(lat)
@@ -342,6 +374,7 @@ def run_hourly(ctx: Ctx) -> Result:
         tlat, tbad = measure(hourly_op_traced)
         failed += tbad
         attempted += len(tlat)
+        failed += int(not check_gold(ctx, _hour_ts(hour), "gold after the last run vs oracle"))
         layer.update(_hourly_layers(ctx, len(tlat)))
         layer["trace.overhead_ratio"] = statistics.median(tlat) / p50
     return Result(setup_s, lat, attempted, failed, lines, layer)
@@ -413,11 +446,10 @@ class Req:
         return {"postal": 24, "latest": 1, "forecast": 48}[self.route]
 
 
-def _requests(rng: random.Random, rate: float, seconds: float, rid0: int) -> list[Req]:
-    """round(rate x seconds) requests at uniform random times in
-    [0, seconds) -- a Poisson process conditioned on its count -- with
-    the route mix in exact shares and Zipf-popular postal codes."""
-    n = max(1, round(rate * seconds))
+def _requests(rng: random.Random, n: int, seconds: float, rid0: int) -> list[Req]:
+    """`n` requests at uniform random times in [0, seconds) -- a Poisson
+    process conditioned on its count -- with the route mix in exact shares
+    and Zipf-popular postal codes."""
     pcs = [f"1{i:04d}" for i in range(SCALE.postal_codes)]
     rng.shuffle(pcs)  # which codes are popular is part of the seed
     weights = [1.0 / (i + 1) ** ZIPF_S for i in range(len(pcs))]
@@ -436,27 +468,57 @@ def _requests(rng: random.Random, rate: float, seconds: float, rid0: int) -> lis
     return out
 
 
+def _serve(ctx: Ctx, app, req: Req, traced: bool) -> None:
+    """Send one request; its latency counts from `req.due`."""
+    req.wait = time.perf_counter() - req.due
+    try:
+        with ctx.tracer.span("api.app", f"req-{req.rid}") if traced else nullcontext() as sp:
+            req.span_id = sp and sp["span_id"]
+            req.status, req.body = call(app, req.path)
+    except Exception as e:  # counted as a failed request
+        req.error = repr(e)
+    req.latency = time.perf_counter() - req.due
+
+
+def closed_loop(ctx: Ctx, app, pool: ThreadPoolExecutor, reqs: list[Req],
+                seconds: float | None) -> tuple[list[Req], float]:
+    """`ctx.cpus` callers that each send the next request of `reqs` as soon
+    as their previous one returns, until `reqs` run out or `seconds` have
+    passed.  Returns (requests served, requests per second)."""
+    it, lock, done = iter(reqs), threading.Lock(), []
+    start = time.perf_counter()
+    deadline = start + seconds if seconds is not None else float("inf")
+
+    def caller() -> None:
+        while True:
+            with lock:
+                req = next(it, None) if time.perf_counter() < deadline else None
+            if req is None:
+                return
+            req.due = time.perf_counter()
+            _serve(ctx, app, req, False)
+            with lock:
+                done.append(req)
+
+    for f in [pool.submit(caller) for _ in range(ctx.cpus)]:
+        f.result(timeout=170)
+    return done, len(done) / (time.perf_counter() - start)
+
+
 def run_level(ctx: Ctx, app, pool: ThreadPoolExecutor, rate: float, seconds: float,
               traced: bool, rid0: int) -> tuple[list[Req], bool]:
     """Open loop at `rate` for `seconds`: this thread dispatches each request
     at its due time to `pool`.  Returns (requests sent, backlog stayed
     bounded); dispatch stops early once more than 4 x workers requests wait
     for a worker."""
-    reqs = _requests(random.Random(f"{ctx.seed}-api-{rate}-{traced}-{rid0}"),
-                     rate, seconds, rid0)
+    reqs = _requests(random.Random(f"{ctx.seed}-api-{traced}-{rid0}"),
+                     max(1, round(rate * seconds)), seconds, rid0)
     lock, started = threading.Lock(), [0]
 
     def serve(req: Req) -> None:
         with lock:
             started[0] += 1
-        req.wait = time.perf_counter() - req.due
-        try:
-            with ctx.tracer.span("api.app", f"req-{req.rid}") if traced else nullcontext() as sp:
-                req.span_id = sp and sp["span_id"]
-                req.status, req.body = call(app, req.path)
-        except Exception as e:  # counted as a failed request
-            req.error = repr(e)
-        req.latency = time.perf_counter() - req.due
+        _serve(ctx, app, req, traced)
 
     start = time.perf_counter() + 0.05
     futures, bounded = [], True
@@ -476,7 +538,7 @@ def run_level(ctx: Ctx, app, pool: ThreadPoolExecutor, rate: float, seconds: flo
 
 
 def run_api(ctx: Ctx) -> Result:
-    setup_s, hour, failed = build_gold(ctx, cron_run=False)
+    setup_s, hour, attempted, failed = build_gold(ctx, 0)
     t0 = time.perf_counter()
     asof = _hour_ts(hour)  # the asof of the set-up's upsert
     app = create_app(ctx.spark, writers.read_table(ctx.spark, ctx.data, "gold", GOLD),
@@ -499,54 +561,67 @@ def run_api(ctx: Ctx) -> Result:
 
     pool = ThreadPoolExecutor(ctx.cpus)
     try:
-        # warm-up: the read path keeps getting faster for hundreds of
-        # requests (consecutive 10 s windows at 6 req/s read 559, 271, 200,
-        # 189, 162, 140 ms), so a closed-loop burst pushes it along the
-        # curve quickly, and a short open-loop window absorbs the switch
-        warm = _requests(random.Random(f"{ctx.seed}-warmup"), API_WARMUP_REQUESTS, 1.0, 0)
-        list(pool.map(lambda q_: call(app, q_.path), warm))
-        run_level(ctx, app, pool, API_REF_RPS, API_WARMUP_OPEN_S, False, 100_000)
-
-        ref, bounded = run_level(ctx, app, pool, API_REF_RPS, ctx.seconds, False, 1_000_000)
+        # warm-up: the read path gets faster over the first hundred or so
+        # requests, and a closed-loop burst pushes it along that curve
+        list(pool.map(lambda q_: call(app, q_.path),
+                      _requests(random.Random(f"{ctx.seed}-warmup"), API_WARMUP_REQUESTS,
+                                1.0, 0)))
+        # more requests than the callers can send in `seconds`
+        pending = _requests(random.Random(f"{ctx.seed}-closed"),
+                            max(API_WARMUP_REQUESTS, int(100 * ctx.seconds)), 1.0, 1_000_000)
+        ref, capacity = closed_loop(ctx, app, pool, pending, ctx.seconds)
         lat_ms = [q_.latency * 1000 for q_ in ref]
         failed += judge(ref)
-        attempted = SETUP_OPS + len(ref)
+        attempted += len(ref)
         p50 = statistics.median(lat_ms)
         tail = percentile_tail(lat_ms)
-        lags = [q_.lag * 1000 for q_ in ref]
         lines = [
-            f"api_p50_ms: {p50:.2f} ms at {API_REF_RPS} req/s ({len(ref)} requests)",
+            f"api_p50_ms: {p50:.2f} ms with {ctx.cpus} closed-loop callers "
+            f"({len(ref)} requests, {capacity:.2f} req/s)",
             f"api_tail_ms: {tail[1]:.2f} ms (p{tail[0]:.1f}, {len(ref)} requests)" if tail
             else f"api_tail_ms: n/a ({len(ref)} requests; a tail needs 11)",
-            f"api generator lateness: median {statistics.median(lags):.2f} ms, "
-            f"max {max(lags):.2f} ms",
         ]
-        layer = {"api.tail_ms": tail[1] if tail else max(lat_ms)}
+        layer = {"api.closed_tail_ms": tail[1] if tail else max(lat_ms),
+                 "api.capacity_rps": capacity}
         if ctx.trace:
-            # api.max_rps: the highest rate, stepping up from the reference
-            # rate, whose tail meets the limit with a bounded backlog
-            max_rps = 0.0
-            passed = bounded and tail is not None and tail[1] <= API_TAIL_LIMIT_MS
-            for i, rate in enumerate((API_REF_RPS, *API_STEP_RPS)):
-                if i:
-                    reqs, bounded = run_level(ctx, app, pool, rate, ctx.seconds, False,
-                                              (2 + i) * 1_000_000)
-                    failed += judge(reqs)
-                    attempted += len(reqs)
-                    t_ = percentile_tail([q_.latency * 1000 for q_ in reqs])
-                    passed = bounded and t_ is not None and t_[1] <= API_TAIL_LIMIT_MS
-                if not passed:
+            # open loop at shares of the closed loop's throughput: the
+            # reference rate's p50 and tail, then api.max_rps, the highest
+            # rate whose tail meets the limit with a bounded backlog
+            rates = [load * capacity for load in (API_REF_LOAD, *API_STEP_LOADS)]
+            max_rps, limit_ms, open_p50 = 0.0, 0.0, 0.0
+            for i, rate in enumerate(rates):
+                reqs, bounded = run_level(ctx, app, pool, rate, ctx.seconds, False,
+                                          (2 + i) * 1_000_000)
+                failed += judge(reqs)
+                attempted += len(reqs)
+                ms = [q_.latency * 1000 for q_ in reqs]
+                t_ = percentile_tail(ms)
+                if not i:
+                    open_p50 = statistics.median(ms)
+                    limit_ms = API_TAIL_LIMIT_X * open_p50
+                    lags = [q_.lag * 1000 for q_ in reqs]
+                    layer["api.open_p50_ms"] = open_p50
+                    layer["api.tail_ms"] = t_[1] if t_ else max(ms)
+                    lines += [
+                        f"api open loop at {rate:.2f} req/s ({API_REF_LOAD} x capacity): "
+                        f"p50 {open_p50:.2f} ms" + (f", tail {t_[1]:.2f} ms (p{t_[0]:.1f}, "
+                                                     f"{len(ms)} requests)" if t_ else ""),
+                        f"api generator lateness: median {statistics.median(lags):.2f} ms, "
+                        f"max {max(lags):.2f} ms",
+                    ]
+                if not (bounded and t_ is not None and t_[1] <= limit_ms):
                     break
                 max_rps = rate
             lines.append(
-                f"api_max_rps: {max_rps:.1f} req/s (tail limit {API_TAIL_LIMIT_MS:.0f} ms; "
-                f"tested {', '.join(map(str, (API_REF_RPS, *API_STEP_RPS)))} req/s)")
+                f"api_max_rps: {max_rps:.2f} req/s (tail limit {limit_ms:.0f} ms = "
+                f"{API_TAIL_LIMIT_X} x the open-loop p50; tested "
+                f"{', '.join(f'{r:.2f}' for r in rates)} req/s)")
             layer["api.max_rps"] = max_rps
 
-            traced, _ = run_level(ctx, app, pool, API_REF_RPS, ctx.seconds, True, 2_000_000)
+            traced, _ = run_level(ctx, app, pool, rates[0], ctx.seconds, True, 9_000_000)
             layer.update(_api_layers(ctx, traced))
             layer["trace.overhead_ratio"] = (
-                statistics.median(q_.latency * 1000 for q_ in traced) / p50)
+                statistics.median(q_.latency * 1000 for q_ in traced) / open_p50)
             failed += judge(traced)
             attempted += len(traced)
         else:
@@ -611,6 +686,7 @@ PER_LAYER = {
     "sources.ingestion.rows_routed": "rows",
     "sources.ingestion.routed_share": "ratio",
     "sources.writers.upsert_s": "s",
+    "sources.writers.backfill_write_s": "s",
     "sources.writers.bytes_written": "B",
     "sources.writers.write_amplification": "ratio",
     "sources.writers.gold_files": "files",
@@ -645,4 +721,7 @@ PER_LAYER = {
     "hourly.freshness_max_s": "s",
     "api.tail_ms": "ms",
     "api.max_rps": "req/s",
+    "api.capacity_rps": "req/s",
+    "api.open_p50_ms": "ms",
+    "api.closed_tail_ms": "ms",
 }
