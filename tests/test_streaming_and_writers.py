@@ -110,6 +110,48 @@ def test_writers_roundtrip_and_upsert(spark, tmp_path):
     assert got[("S2", H(-1))] == 7.0   # inserted
 
 
+def test_upsert_fails_on_unreadable_table(spark, tmp_path):
+    """A damaged file in an existing table fails the upsert loudly: no
+    partition loses rows and the damaged file is left as it was. The
+    damaged file is the first one Spark reads to infer the schema (one
+    file per date partition, the earliest date): a bare "first load"
+    fallback used to catch that failure and overwrite the partition with
+    the batch alone, 100 rows becoming 81."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    root = str(tmp_path / "lake")
+    rows = [_obs(f"S{i % 20}", H(-24 * (i // 20) - 1), float(i)) for i in range(100)]
+    first = H(-24 * 4 - 1)
+    write_table(spark.createDataFrame(rows, schemas.RAW_WEATHER_OBSERVATIONS).coalesce(1),
+                root, "bronze", "raw_weather_observations", partition_by_date_of="timestamp")
+    path = os.path.join(root, "bronze", "raw_weather_observations")
+    [damaged] = glob.glob(f"{path}/__part_date={first.date()}/*.parquet")
+
+    def intact():  # rows of every other file, partition by partition
+        return {f: pq.read_metadata(f).num_rows
+                for f in glob.glob(f"{path}/*/*.parquet") if f != damaged}
+
+    before = intact()
+    assert sum(before.values()) + pq.read_metadata(damaged).num_rows == 100
+    with open(damaged, "r+b") as fh:
+        fh.truncate(os.path.getsize(damaged) // 2)
+    with open(damaged, "rb") as fh:
+        damaged_bytes = fh.read()
+
+    incoming = spark.createDataFrame([_obs("S0", first, 99.0)],
+                                     schemas.RAW_WEATHER_OBSERVATIONS)
+    with pytest.raises(Exception):
+        upsert_table(spark, incoming, root, "bronze", "raw_weather_observations",
+                     keys=["station_id", "timestamp"], partition_by_date_of="timestamp",
+                     order_col="_ingest_ts")
+    assert intact() == before
+    with open(damaged, "rb") as fh:
+        assert fh.read() == damaged_bytes
+
+
 def _fcst(sid, issue, target, temp):
     vals = dict(
         station_id=sid, forecast_timestamp=issue, target_timestamp=target,

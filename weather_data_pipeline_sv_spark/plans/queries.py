@@ -29,7 +29,9 @@ def weather_history(
     Replicates actual behavior: ``hours`` bounds both the range filter and
     the LIMIT (weather.py:43-51). Selects the schema's
     relative_humidity_avg (the reference SQL names a nonexistent
-    humidity_avg — bug Q9; we serve the real column).
+    humidity_avg — bug Q9; we serve the real column). Rows of one hour
+    from several forecast issues are ordered newest issue first, so the
+    LIMIT keeps a fixed subset.
     """
     cutoff = ntz_lit(asof) - F.expr(f"INTERVAL {int(hours)} HOURS")
     return (
@@ -45,7 +47,7 @@ def weather_history(
             "cloud_cover_avg", "pressure_msl_avg", "relative_humidity_avg",
             "num_stations", "avg_quality_score",
         )
-        .orderBy(F.desc("timestamp"))
+        .orderBy(F.desc("timestamp"), F.desc("forecast_timestamp"))
         .limit(int(hours))
     )
 
@@ -65,7 +67,8 @@ def latest_weather(gold: DataFrame, postal_code: str) -> DataFrame:
 def forecast_window(
     gold: DataFrame, postal_code: str, asof: dt.datetime, hours_ahead: int = 48
 ) -> DataFrame:
-    """Forecast rows from asof to asof+N hours, ascending (weather.py:108-152)."""
+    """Forecast rows from asof to asof+N hours, ascending (weather.py:108-152);
+    the forecast issues of one target hour in issue order."""
     return (
         gold.filter(
             (F.col("postal_code") == postal_code)
@@ -76,7 +79,7 @@ def forecast_window(
                 <= ntz_lit(asof) + F.expr(f"INTERVAL {int(hours_ahead)} HOURS")
             )
         )
-        .orderBy("timestamp")
+        .orderBy("timestamp", "forecast_timestamp")
     )
 
 

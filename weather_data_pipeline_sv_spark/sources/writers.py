@@ -139,12 +139,13 @@ def upsert_table(
     incoming = incoming.withColumn(
         _DATE_COL, F.to_date(F.col(partition_by_date_of))
     )
-    try:
-        existing = spark.read.parquet(path)
-    except Exception:  # first load
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    if not jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath):
         incoming.write.mode("overwrite").partitionBy(_DATE_COL).parquet(path)
-        return path
-
+        return path  # first load
+    # an existing table that cannot be read fails the upsert: treating it
+    # as a first load would overwrite the touched partitions with the batch
+    existing = spark.read.parquet(path)
     touched = [r[_DATE_COL] for r in incoming.select(_DATE_COL).distinct().collect()]
     slice_ = existing.filter(F.col(_DATE_COL).isin(touched))
     merged = merge_update_wins(slice_, incoming, keys, order_col=order_col)
