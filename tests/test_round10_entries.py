@@ -272,7 +272,8 @@ def test_auto_selector_decisions_pinned_at_wx_dirs(
         return orig(*a, **k)
 
     monkeypatch.setattr(spatial_mod, "bucketed_range_join", spy)
-    # building the plan runs the decision; no action is triggered
+    # building the plan runs the decision; run_transform then computes
+    # the window's gold once (Spark jobs run), which does not re-decide
     run_transform(
         t["raw_weather_observations"], t["raw_weather_forecasts"],
         t["weather_stations"], t["postal_codes"], asof,

@@ -7,10 +7,12 @@ from __future__ import annotations
 
 import datetime
 import math
+import shutil
 
 import duckdb
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from weather_data_pipeline_sv_spark.operators.merge import (
     merge_first_wins,
@@ -24,7 +26,9 @@ from weather_data_pipeline_sv_spark.plans.cleaning import (
     clean_forecasts,
     clean_observations,
 )
-from weather_data_pipeline_sv_spark.plans.pipeline import run_transform
+from weather_data_pipeline_sv_spark.plans.pipeline import GOLD_KEYS, run_transform
+from weather_data_pipeline_sv_spark.plans.validation import validate_ml_ready_data
+from weather_data_pipeline_sv_spark.sources import writers
 
 from weather_fixtures import ASOF, build_all
 from weather_oracle import gold_oracle_sql, temporal_issue_count_sql
@@ -35,6 +39,10 @@ SCHEMAS = {
     "raw_weather_observations": schemas.RAW_WEATHER_OBSERVATIONS,
     "raw_weather_forecasts": schemas.RAW_WEATHER_FORECASTS,
 }
+
+# run_transform's positional table order
+SCHEMAS_ORDER = ["raw_weather_observations", "raw_weather_forecasts",
+                 "weather_stations", "postal_codes"]
 
 GOLD_COMPARE_COLS = [
     f.name
@@ -55,8 +63,12 @@ def weather_dir(spark, tmp_path_factory):
 
 @pytest.fixture(scope="session")
 def bronze(spark, weather_dir):
+    return _read_bronze(spark, weather_dir)
+
+
+def _read_bronze(spark, base):
     out = {
-        name: spark.read.schema(SCHEMAS[name]).parquet(str(weather_dir / name))
+        name: spark.read.schema(SCHEMAS[name]).parquet(str(base / name))
         for name in SCHEMAS
     }
     # ingestion-time key enforcement (reference ON CONFLICT at insert):
@@ -196,6 +208,26 @@ def test_run_transform_end_to_end(spark, bronze):
     gold.unpersist()
 
 
+def test_gold_outlives_its_inputs(spark, bronze, weather_dir, tmp_path):
+    """run_transform computes the window's gold once, when it is called:
+    validating and upserting it afterwards reads stored blocks, so they
+    still work after the bronze files are gone. A gold that re-ran its
+    plan per action would re-read the deleted files here."""
+    copy = tmp_path / "bronze"
+    shutil.copytree(weather_dir, copy)
+    copied = _read_bronze(spark, copy)
+    res = run_transform(*(copied[n] for n in SCHEMAS_ORDER), ASOF, validate=True)
+    shutil.rmtree(copy)
+    writers.upsert_table(spark, res.gold, str(tmp_path), "gold", "t",
+                         GOLD_KEYS, "timestamp")
+    got = writers.read_table(spark, str(tmp_path), "gold", "t")
+    want = run_transform(*(bronze[n] for n in SCHEMAS_ORDER), ASOF).gold
+    a = _rows([tuple(r) for r in got.select(*GOLD_COMPARE_COLS).collect()])
+    b = _rows([tuple(r) for r in want.select(*GOLD_COMPARE_COLS).collect()])
+    assert a == b and len(a) > 0
+    assert res.validation["obs_postal_codes"] > 0
+
+
 def test_idempotent_rerun(spark, bronze):
     """Re-running the transform and merging into existing gold is a no-op
     (the ON CONFLICT idempotency property, aggregation.py:205-222)."""
@@ -312,3 +344,116 @@ def test_grid_path_rejects_polar_centroids(spark, bronze):
     )
     with pytest.raises(Exception, match="polar centroid latitude"):
         gold.collect()
+
+
+# -- validate_ml_ready_data: every number against the reference's queries --
+
+_H = datetime.timedelta(hours=1)
+_VALIDATION_COLS = [
+    ("postal_code", "VARCHAR"), ("timestamp", "TIMESTAMP"),
+    ("data_type", "VARCHAR"), ("forecast_timestamp", "TIMESTAMP"),
+    ("avg_quality_score", "DOUBLE"), ("temperature_avg", "DOUBLE"),
+    ("num_stations", "BIGINT"),
+]
+
+
+def _validation_gold(n_codes, null_temp=0, no_station=0, stale_fcst=0,
+                     null_quality=0):
+    """Hand-built gold around ASOF (24 h window, cutoff ASOF - 24 h):
+    `n_codes` observation rows at ASOF - 1 h and as many forecasts issued
+    at ASOF - 1 h, so 2 * n_codes rows have `timestamp` in the window;
+    the first `null_temp` of those have a NULL temperature, the last
+    `no_station` have no station. `stale_fcst` forecasts of further
+    postal codes are issued inside the window but target an hour before
+    the cutoff; rows from two days ago are outside every filter. Both
+    carry NULL temperatures and no stations, which must not count."""
+    recent = [("observation", ASOF - _H, None, 0.75)] * n_codes + [
+        ("forecast", ASOF + 3 * _H, ASOF - _H, 0.25)
+    ] * n_codes
+    rows = []
+    for i, (dtype, ts, fts, q) in enumerate(recent):
+        code = f"{i % max(n_codes, 1):05d}"
+        if dtype == "observation" and i < null_quality:
+            q = None
+        temp = None if i < null_temp else 10.0
+        stations = 0 if i >= len(recent) - no_station else 2
+        rows.append((code, ts, dtype, fts, q, temp, stations))
+    for j in range(stale_fcst):
+        rows.append((f"{n_codes + j:05d}", ASOF - 30 * _H, "forecast",
+                     ASOF - 3 * _H, 0.5, None, 0))
+    rows.append(("99999", ASOF - 48 * _H, "observation", None, 1.0, None, 0))
+    rows.append(("99999", ASOF - 48 * _H, "forecast", ASOF - 50 * _H, 1.0,
+                 None, 0))
+    return rows
+
+
+def _reference_validation(rows):
+    """The reference's three queries (transform.py:126-265) in DuckDB,
+    and its thresholds and messages in plain Python."""
+    con = duckdb.connect()
+    con.execute("SET TimeZone='UTC'")
+    con.execute("CREATE TABLE gold ("
+                + ", ".join(f"{n} {t}" for n, t in _VALIDATION_COLS) + ")")
+    if rows:
+        con.executemany("INSERT INTO gold VALUES (?, ?, ?, ?, ?, ?, ?)", rows)
+    cutoff = f"TIMESTAMP '{ASOF - 24 * _H}'"
+    obs_codes, obs_q = con.execute(
+        "SELECT COUNT(DISTINCT postal_code), AVG(avg_quality_score) FROM gold "
+        f"WHERE data_type = 'observation' AND timestamp >= {cutoff}"
+    ).fetchone()
+    fcst_codes, fcst_q = con.execute(
+        "SELECT COUNT(DISTINCT postal_code), AVG(avg_quality_score) FROM gold "
+        f"WHERE data_type = 'forecast' AND forecast_timestamp >= {cutoff}"
+    ).fetchone()
+    null_temp, no_st, total = con.execute(
+        "SELECT SUM(CASE WHEN temperature_avg IS NULL THEN 1 ELSE 0 END), "
+        "SUM(CASE WHEN num_stations = 0 THEN 1 ELSE 0 END), COUNT(*) "
+        f"FROM gold WHERE timestamp >= {cutoff}"
+    ).fetchone()
+    con.close()
+    issues = []
+    if obs_codes < 50:
+        issues.append(f"Low observations coverage: only {obs_codes} postal codes")
+    if (obs_q or 0.0) < 0.5:
+        issues.append(f"Low observations quality: {obs_q or 0.0:.2f}")
+    if fcst_codes < 50:
+        issues.append(f"Low forecasts coverage: only {fcst_codes} postal codes")
+    if total:
+        if null_temp / total * 100 > 20:
+            issues.append("High percentage of null temperatures: "
+                          f"{null_temp / total * 100:.1f}%")
+        if no_st / total * 100 > 10:
+            issues.append("High percentage of records with no stations: "
+                          f"{no_st / total * 100:.1f}%")
+    else:
+        issues.append("No records found in analytics table for validation")
+    return {
+        "passed": not issues, "issues": issues,
+        "obs_postal_codes": obs_codes, "fcst_postal_codes": fcst_codes,
+        "obs_quality": obs_q or 0.0, "fcst_quality": fcst_q or 0.0,
+    }
+
+
+@pytest.mark.parametrize("kwargs,passed", [
+    (dict(n_codes=0), False),  # empty window: no records, no coverage
+    # stale forecasts on the thresholds: counting them as recent would
+    # push the NULL-temperature and no-station shares over, or under
+    (dict(n_codes=50, null_temp=20, no_station=10, null_quality=1,
+          stale_fcst=5), True),
+    (dict(n_codes=49, null_temp=19, no_station=9), False),
+    (dict(n_codes=45, stale_fcst=5), False),  # only forecasts reach 50
+    (dict(n_codes=50, null_temp=21, no_station=9, stale_fcst=5), False),
+    (dict(n_codes=50, null_temp=19, no_station=11, stale_fcst=5), False),
+    (dict(n_codes=50, null_quality=50), False),  # all-NULL quality -> 0.0
+], ids=["empty_window", "fifty_codes_at_thresholds", "forty_nine_codes",
+        "stale_forecasts", "null_temp_above", "no_station_above",
+        "null_quality"])
+def test_validation_numbers_match_reference(spark, kwargs, passed):
+    rows = _validation_gold(**kwargs)
+    full = schemas.ANALYTICS_WEATHER_BY_POSTAL_CODE
+    gold = spark.createDataFrame(
+        rows, schema=StructType([full[n] for n, _ in _VALIDATION_COLS]))
+    got = validate_ml_ready_data(gold, ASOF)
+    want = _reference_validation(rows)
+    assert got == want
+    assert got["passed"] is passed

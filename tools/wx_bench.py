@@ -47,6 +47,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import measure_best
 from weather_data_pipeline_sv_spark.plans import schemas
+from weather_data_pipeline_sv_spark.plans.aggregation import (
+    FORECAST, OBSERVATION, aggregate_to_postal_codes,
+)
+from weather_data_pipeline_sv_spark.plans.cleaning import (
+    clean_forecasts, clean_observations,
+)
 from weather_data_pipeline_sv_spark.plans.pipeline import run_transform
 from weather_data_pipeline_sv_spark.plans.queries import (
     v_latest_observations,
@@ -122,11 +128,18 @@ def plan_facts(spark, t: dict) -> dict:
     spark.conf.set("spark.sql.maxMetadataStringLength", "2000")
 
     def plan(spatial: str) -> str:
-        g = run_transform(
-            t["raw_weather_observations"], t["raw_weather_forecasts"],
-            t["weather_stations"], t["postal_codes"], asof,
+        # the window's plan before run_transform materializes it (its
+        # gold's own plan is a scan of the stored blocks)
+        st, pcs = t["weather_stations"], t["postal_codes"]
+        g = aggregate_to_postal_codes(
+            clean_observations(t["raw_weather_observations"], asof, 168),
+            st, pcs, OBSERVATION, asof, lookback_hours=168,
             spatial_join=spatial,
-        ).gold
+        ).unionByName(aggregate_to_postal_codes(
+            clean_forecasts(t["raw_weather_forecasts"], asof, 48),
+            st, pcs, FORECAST, asof, lookback_hours=48,
+            spatial_join=spatial,
+        ))
         return g._jdf.queryExecution().executedPlan().toString()
 
     b, g = plan("broadcast"), plan("grid")

@@ -7,6 +7,14 @@ aggregate), results merge into gold with update-wins semantics
 validation barrier reads the merged gold. Airflow's cron + max_active_runs
 becomes "call run_transform with an explicit asof"; idempotent re-runs fall
 out of merge-by-key.
+
+The window's gold is computed once, when ``run_transform`` is called, and
+held as a local checkpoint (``functions/caching.stage_cache``): the
+validation, the upsert's touched-dates collect and its write each read the
+stored blocks instead of re-running clean → spatial fan-out → aggregation.
+The blocks are released when the returned frames are garbage-collected.
+Lineage is truncated, so losing an executor that holds blocks fails the
+run loudly and the scheduler retries it; nothing is recomputed silently.
 """
 
 from __future__ import annotations
@@ -17,6 +25,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 
+from ..functions.caching import stage_cache
 from ..operators.merge import merge_update_wins
 from .aggregation import FORECAST, OBSERVATION, aggregate_to_postal_codes
 from .cleaning import check_temporal_consistency, clean_forecasts, clean_observations
@@ -53,6 +62,12 @@ def run_transform(
     ``spatial_join``: fan-out strategy for the postal mapping —
     "broadcast" (reference-scale default), "grid" (the X4 equi-join
     path), or "auto" (size the dim and pick; see plans/aggregation.py).
+
+    The window's gold (both branches, before the merge with
+    ``existing_gold``) is computed here, once, and every later action on
+    ``gold`` reads its stored blocks; they are released when the frame is
+    garbage-collected. An executor lost while holding them fails the run
+    loudly (the lineage is truncated) and the scheduler retries it.
     """
     stg_obs = clean_observations(raw_observations, asof, obs_lookback_hours)
     stg_fcst = clean_forecasts(raw_forecasts, asof, fcst_lookback_hours)
@@ -67,7 +82,7 @@ def run_transform(
         stg_fcst, stations, postal_codes, FORECAST, asof,
         lookback_hours=fcst_lookback_hours, spatial_join=spatial_join,
     )
-    incoming = gold_obs.unionByName(gold_fcst)
+    incoming = stage_cache(gold_obs.unionByName(gold_fcst), eager=True)
 
     if existing_gold is not None:
         gold = merge_update_wins(existing_gold, incoming, GOLD_KEYS)

@@ -1,10 +1,11 @@
 """ML-readiness validation over the gold table.
 
 Re-expresses `src/transformation/transform.py:126-265`
-(``validate_ml_ready_data``) as three groupBy-less aggregate probes + the
-reference's exact pass/fail thresholds (≥50 postal codes per type, avg
-quality ≥0.5, ≤20% NULL temperature, ≤10% zero-station rows), anchored to
-an explicit ``asof`` instead of NOW().
+(``validate_ml_ready_data``) as one groupBy-less aggregate -- one Spark job
+-- whose conditional aggregates keep each of the reference's three queries'
+own filter, plus the reference's exact pass/fail thresholds (≥50 postal
+codes per type, avg quality ≥0.5, ≤20% NULL temperature, ≤10% zero-station
+rows), anchored to an explicit ``asof`` instead of NOW().
 """
 
 from __future__ import annotations
@@ -27,42 +28,27 @@ def validate_ml_ready_data(
     gold: DataFrame, asof: dt.datetime, window_hours: int = 24
 ) -> dict[str, Any]:
     cutoff = ntz_lit(asof) - F.expr(f"INTERVAL {int(window_hours)} HOURS")
-
-    obs = (
-        gold.filter(
-            (F.col("data_type") == "observation") & (F.col("timestamp") >= cutoff)
-        )
-        .agg(
-            F.countDistinct("postal_code").alias("unique_codes"),
-            F.avg("avg_quality_score").alias("avg_quality"),
-            F.max("timestamp").alias("latest_timestamp"),
-            F.count(F.lit(1)).alias("total_records"),
-        )
-        .first()
+    # each metric keeps the reference query's own filter; rows outside
+    # all three never reach the aggregate
+    recent = F.col("timestamp") >= cutoff
+    is_obs = (F.col("data_type") == "observation") & recent
+    is_fcst = (F.col("data_type") == "forecast") & (
+        F.col("forecast_timestamp") >= cutoff
     )
-    fcst = (
-        gold.filter(
-            (F.col("data_type") == "forecast")
-            & (F.col("forecast_timestamp") >= cutoff)
-        )
+    m = (
+        gold.filter(recent | is_fcst)
         .agg(
-            F.countDistinct("postal_code").alias("unique_codes"),
-            F.avg("avg_quality_score").alias("avg_quality"),
-            F.max("timestamp").alias("latest_timestamp"),
-            F.count(F.lit(1)).alias("total_records"),
-        )
-        .first()
-    )
-    nulls = (
-        gold.filter(F.col("timestamp") >= cutoff)
-        .agg(
-            F.sum(F.when(F.col("temperature_avg").isNull(), 1).otherwise(0)).alias(
+            F.countDistinct(F.when(is_obs, F.col("postal_code"))).alias("obs_codes"),
+            F.avg(F.when(is_obs, F.col("avg_quality_score"))).alias("obs_quality"),
+            F.countDistinct(F.when(is_fcst, F.col("postal_code"))).alias("fcst_codes"),
+            F.avg(F.when(is_fcst, F.col("avg_quality_score"))).alias("fcst_quality"),
+            F.sum(F.when(recent & F.col("temperature_avg").isNull(), 1)).alias(
                 "null_temp"
             ),
-            F.sum(F.when(F.col("num_stations") == 0, 1).otherwise(0)).alias(
+            F.sum(F.when(recent & (F.col("num_stations") == 0), 1)).alias(
                 "no_stations"
             ),
-            F.count(F.lit(1)).alias("total"),
+            F.count(F.when(recent, 1)).alias("total"),
         )
         .first()
     )
@@ -70,10 +56,10 @@ def validate_ml_ready_data(
     results: dict[str, Any] = {
         "passed": True,
         "issues": [],
-        "obs_postal_codes": obs["unique_codes"] or 0,
-        "fcst_postal_codes": fcst["unique_codes"] or 0,
-        "obs_quality": float(obs["avg_quality"]) if obs["avg_quality"] else 0.0,
-        "fcst_quality": float(fcst["avg_quality"]) if fcst["avg_quality"] else 0.0,
+        "obs_postal_codes": m["obs_codes"] or 0,
+        "fcst_postal_codes": m["fcst_codes"] or 0,
+        "obs_quality": float(m["obs_quality"]) if m["obs_quality"] else 0.0,
+        "fcst_quality": float(m["fcst_quality"]) if m["fcst_quality"] else 0.0,
     }
 
     def fail(msg: str) -> None:
@@ -87,12 +73,12 @@ def validate_ml_ready_data(
     if results["fcst_postal_codes"] < MIN_POSTAL_CODES:
         fail(f"Low forecasts coverage: only {results['fcst_postal_codes']} postal codes")
 
-    total = nulls["total"] or 0
+    total = m["total"] or 0
     if total > 0:
-        null_pct = (nulls["null_temp"] or 0) / total * 100
+        null_pct = (m["null_temp"] or 0) / total * 100
         if null_pct > MAX_NULL_TEMP_PCT:
             fail(f"High percentage of null temperatures: {null_pct:.1f}%")
-        no_st_pct = (nulls["no_stations"] or 0) / total * 100
+        no_st_pct = (m["no_stations"] or 0) / total * 100
         if no_st_pct > MAX_NO_STATION_PCT:
             fail(f"High percentage of records with no stations: {no_st_pct:.1f}%")
     else:
