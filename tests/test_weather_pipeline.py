@@ -11,6 +11,7 @@ import shutil
 
 import duckdb
 import pytest
+from pyspark.errors import ArithmeticException
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -244,6 +245,41 @@ def test_idempotent_rerun(spark, bronze):
     a = _rows([tuple(r) for r in first.select(*GOLD_COMPARE_COLS).collect()])
     b = _rows([tuple(r) for r in second.select(*GOLD_COMPARE_COLS).collect()])
     assert a == b
+
+
+def test_generated_code_is_reused_across_runs(spark, bronze, tmp_path):
+    """Consecutive cron runs reuse each other's generated classes: only the
+    ones that inline the run's ``asof`` literal are compiled again (20 on
+    this fixture). With Spark's default codegen cache of 100 entries
+    (session.py) each run evicts the classes the next one needs, and the
+    last run below compiled 116-121."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def cron_run(asof):
+        r = run_transform(*(bronze[n] for n in SCHEMAS_ORDER), asof,
+                          validate=True)
+        writers.upsert_table(spark, r.gold, str(tmp_path), "gold", "t",
+                             GOLD_KEYS, "timestamp")
+
+    hour = datetime.timedelta(hours=1)
+    cron_run(ASOF - hour)  # first load: gold exists before the runs compared
+    cron_run(ASOF)
+    before = codegen.METRIC_COMPILATION_TIME().getCount()
+    cron_run(ASOF + hour)
+    assert codegen.METRIC_COMPILATION_TIME().getCount() - before <= 40
+
+
+def test_runtime_errors_still_raise(spark, bronze):
+    """get_spark turns PySpark's per-Column call-site capture off
+    (session.py). That drops only the Python line from a runtime error's
+    DataFrame context: an ANSI error still fails the action with its
+    condition."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    bad = bronze["weather_stations"].select(
+        (F.col("latitude") / F.lit(0)).alias("x"))
+    with pytest.raises(ArithmeticException) as e:
+        bad.collect()
+    assert e.value.getCondition() == "DIVIDE_BY_ZERO"
 
 
 @pytest.mark.parametrize("data_type,lookback",
