@@ -248,9 +248,10 @@ def test_idempotent_rerun(spark, bronze):
 
 
 def test_generated_code_is_reused_across_runs(spark, bronze, tmp_path):
-    """Consecutive cron runs reuse each other's generated classes: only the
-    ones that inline the run's ``asof`` literal are compiled again (20 on
-    this fixture). With Spark's default codegen cache of 100 entries
+    """Consecutive cron runs in one driver JVM, as under a long-lived
+    Scheduler, reuse each other's generated classes: only the ones that
+    inline the run's ``asof`` literal are compiled again (20 on this
+    fixture). With Spark's default codegen cache of 100 entries
     (session.py) each run evicts the classes the next one needs, and the
     last run below compiled 116-121."""
     codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics

@@ -13,8 +13,12 @@ with exactly these semantics, all reproduced here:
 
 The runner is deliberately engine-agnostic: a job is any callable taking
 the scheduled ``asof`` datetime (e.g. ``functools.partial(run_transform,
-...)``) — the Spark work stays in `plans/pipeline.py`. A real deployment
-would drive :func:`Scheduler.tick` from cron/systemd/Airflow itself; the
+...)``) — the Spark work stays in `plans/pipeline.py`. A deployment keeps
+one Scheduler in a long-lived driver process and calls
+:meth:`Scheduler.tick` on a timer: the last tick and the active runs are
+held in memory, so catch-up and overlap work only within one process, and
+every run shares that process's SparkSession and JVM (which
+``session.get_spark``'s codegen cache relies on). The
 point is that the ORCHESTRATION CONTRACT (when a run fires, what happens
 on failure, what happens when the previous run is still going) is code
 under test here, not configuration lore.

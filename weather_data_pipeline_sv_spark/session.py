@@ -9,25 +9,11 @@ config choice is made for a real multi-executor cluster at ~100 TB:
 - session timezone pinned to UTC (the reference stores naive-UTC
   timestamps; pinning makes results independent of driver locale)
 - Arrow enabled for any pandas interchange (vectorized, not per-row)
-
-Two constants cut the fixed driver cost that Spark 4 adds to every hourly
-cron run (clean → aggregate → validate → gold upsert), which on a 33-row
-batch is nearly all of the run's time (``perfbench`` ``hourly``, 4-core
-host, 10 seeds: ``latency_p50_ms`` median 8.1 → 6.1 s):
-
-- the whole-stage codegen cache holds 1000 classes instead of 100. One
-  cron run needs about 150-250 distinct generated classes, so at 100 the
-  LRU evicted each before the next run could reuse it: about 120 Janino
-  compiles per run at 100 entries, about 20 at 1000. The ~20 left are
-  classes whose code inlines the run's ``asof`` literal.
-- PySpark's per-Column call-site capture is off. It costs about 10 Py4J
-  round trips on every ``F.*`` call and Column operator; building
-  ``run_transform``'s plan fell from 1.2-1.3 s to 0.5-0.7 s, and a cron
-  run from about 13.5k round trips to about 5.7k.
-
-Neither is set by ``configure_session`` on a session it did not build: the
-codegen cache size is a static conf, fixed when the JVM first generates
-code, and call-site capture is the driver's own error-reporting choice.
+- two constants that cut the fixed driver cost of an hourly cron run: a
+  codegen cache that holds a run's generated classes, and no per-Column
+  call-site capture (reasons and trade-offs beside each; measured in
+  ROADMAP.md, "Fixed driver cost of one untraced cron run"). Neither is
+  set by ``configure_session``.
 """
 
 from __future__ import annotations
@@ -84,19 +70,22 @@ def get_spark(
         # merge-by-key writers overwrite only touched date partitions
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
-        # Generated-class LRU (static; default 100). A cron run's working
-        # set is about 150-250 classes, so the default recompiled about 120
-        # per run; at 1000 it is about 20. Peak RSS of perfbench runs did
-        # not rise (hourly -0.6 %, api -2.2 %, medians of 10 seeds).
+        # Generated-class LRU (static; default 100). One cron run uses about
+        # 150-250 classes, so at 100 each run evicts the classes the next
+        # run would reuse. This pays off only when one driver JVM serves
+        # consecutive cron runs: a long-lived driver ticking
+        # plans/scheduler.py's Scheduler, whose catch-up and overlap state
+        # lives in that process, or perfbench's hourly workload. A cron run
+        # in a fresh JVM compiles nearly all of its classes either way.
         .config("spark.sql.codegen.cache.maxEntries", "1000")
         # Per-Column call-site capture (PySpark 4): each F.* call and
         # Column operator otherwise reads the active session and a conf,
         # walks the Python stack and sets and clears a JVM thread-local,
-        # about 10 Py4J round trips. Off, run_transform's plan builds in
-        # about half the time. Lost: only the Python file and line in the
-        # "== DataFrame ==" context of a runtime error; the error itself
-        # (e.g. ANSI DIVIDE_BY_ZERO) is raised as before. PySpark reads
-        # this once per process, at the first Column call with a session.
+        # about 10 Py4J round trips; this helps a fresh JVM too. Lost: only
+        # the Python file and line in the "== DataFrame ==" context of a
+        # runtime error; the error itself (e.g. ANSI DIVIDE_BY_ZERO) is
+        # raised as before. PySpark reads this once per process, at the
+        # first Column call with a session.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
