@@ -23,8 +23,8 @@ This gate makes it fail. For each given artifact it asserts:
   gate already catches.
 
 Usage:
-    python tools/artifact_gate.py CORRECTNESS_LOCAL_r06.json \
-        [PLAN_AUDIT_r06.json ...]
+    python tools/driver_sim.py SF_DIR --json corr.json
+    python tools/artifact_gate.py corr.json [plan_audit.json ...]
 
 Exit 0 iff every artifact is complete and green. Run it AFTER the last
 entry-adding commit, as the final step of the round-close protocol

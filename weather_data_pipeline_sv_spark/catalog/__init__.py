@@ -38,20 +38,7 @@ def register(name: str, oracle: str | None = None):
 
 def load_all() -> None:
     """Import every catalog module so its queries register."""
-    from . import (  # noqa: F401
-        composite,
-        core,
-        extras,
-        hybrid,
-        multimodal,
-        text,
-        text_bpe_sketch,
-        text_chunks,
-        text_dedup,
-        text_retrieval,
-        vector,
-        weatherlike,
-    )
+    from . import composite, core, extras, weatherlike  # noqa: F401
 
 
 def all_queries():

@@ -39,20 +39,3 @@ def haversine_km_sql(lat1: str, lon1: str, lat2: str, lon2: str) -> str:
         f" * pow(sin(radians(({lon2}) - ({lon1})) / 2), 2)))"
     )
 
-
-def grid_cell(lat: Column, lon: Column, cell_deg: float = 0.5) -> Column:
-    """Coarse grid-cell id for pre-bucketing a spatial join at scale.
-
-    At 100 TB the broadcast-NL range join (fine for a ~900-row postal dim,
-    reference README.md:139) stops working if the dim grows unbounded.
-    Bucketing both sides by cell id — points to their own cell, centroids to
-    their cell plus the 8 neighbors (one cell ≈ 55 km at 0.5°) — turns the
-    theta join into an equi join on cell id that shuffles and parallelizes
-    on the key; the exact haversine filter then prunes within buckets.
-    See ``operators/spatial.py::bucketed_range_join``.
-    """
-    return F.concat_ws(
-        ":",
-        F.floor(lat / cell_deg).cast("long"),
-        F.floor(lon / cell_deg).cast("long"),
-    )

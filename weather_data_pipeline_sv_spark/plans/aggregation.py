@@ -24,7 +24,7 @@ for a postal dim too big to broadcast), or "auto" (count the small dim
 stats, no data scanned; grid past ``BROADCAST_MAX_CENTROIDS`` on the
 dim side or ``BROADCAST_MAX_PROBE_PAIRS`` on the |points| x
 |centroids| product, both constants justified from the measured
-BENCH_WEATHER crossover).
+crossover).
 Both produce IDENTICAL pairs (pinned in tests/test_weather_pipeline);
 tools/wx_bench.py measures the crossover on the scaled weather dirs.
 """
@@ -55,7 +55,7 @@ BROADCAST_MAX_CENTROIDS = 100_000
 #: The crossover also arrives on the POINT side (round-7 verdict #2):
 #: BNL probe cost is |points| x |centroids| haversine evaluations, so a
 #: big-enough fact beats the grid path's shuffle even with a tiny dim.
-#: Measured on the scaled weather dirs (BENCH_WEATHER.json, 900
+#: Measured on the scaled weather dirs (tools/wx_bench.py, 900
 #: centroids): at wx10 the obs window is ~1.5e8 probe pairs and
 #: broadcast wins by 11% (27.9 vs 31.5 s); at wx30 it is ~4.1e8 pairs
 #: and GRID wins by 18% (96.7 vs 117.4 s). The threshold sits at the
