@@ -35,8 +35,7 @@ def _write(tmp_path, name, obj):
 
 def test_complete_green_sweep_passes(tmp_path):
     keys = live_query_keys()
-    # the whole catalog loaded (74 entries), not a partial import
-    assert len(keys) >= 74
+    assert len(keys) > 100
     p = _write(tmp_path, "ok.json", _green(keys))
     assert check(p, keys) == []
 

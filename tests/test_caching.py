@@ -1,5 +1,5 @@
 """functions/caching: mode selection + semantic equivalence of the three
-durability modes."""
+durability modes, and the semantic-dedup dense-id precondition guard."""
 
 from __future__ import annotations
 
@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from weather_data_pipeline_sv_spark.functions.caching import (
     cache_mode,
+    loop_cache,
     release_stage_caches,
     stage_cache,
 )
@@ -89,6 +90,16 @@ def test_release_stage_caches_ignores_local_mode(spark, mode_env):
     assert release_stage_caches() == 0
 
 
+def test_loop_cache_truncates_under_persist_mode(spark, mode_env):
+    # loop state must be plan-truncating even in persist mode (iterative
+    # plans otherwise nest) — loop_cache falls back to localCheckpoint,
+    # whose result is NOT marked with the persist storage level
+    mode_env("persist")
+    out = loop_cache(spark.range(10), eager=True)
+    assert out.storageLevel != StorageLevel.MEMORY_AND_DISK
+    assert out.count() == 10
+
+
 def test_reliable_mode_checkpoints(spark, mode_env, tmp_path, monkeypatch):
     mode_env("reliable")
     monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path / "ck"))
@@ -96,3 +107,18 @@ def test_reliable_mode_checkpoints(spark, mode_env, tmp_path, monkeypatch):
     # this still exercises the checkpoint() path either way
     out = stage_cache(spark.range(25), eager=True)
     assert out.count() == 25
+
+
+def test_dense_count_accepts_dense_rejects_sparse(spark):
+    from weather_data_pipeline_sv_spark.catalog.vector import _dense_count
+
+    dense = spark.range(10).select(F.col("id").alias("vec_id"))
+    assert _dense_count(dense) == 10
+    sparse = spark.range(10).select((F.col("id") * 2).alias("vec_id"))
+    with pytest.raises(ValueError, match="dense UNIQUE vec_id"):
+        _dense_count(sparse)
+    # {0,1,1,3} passes a min/max/count-only check — the distinct count
+    # is what catches it
+    dup = spark.createDataFrame([(0,), (1,), (1,), (3,)], "vec_id long")
+    with pytest.raises(ValueError, match="dense UNIQUE vec_id"):
+        _dense_count(dup)

@@ -3,7 +3,7 @@ process with a VANILLA SparkSession (none of this repo's tuned configs) and
 under a non-UTC host timezone — the adversarial conditions the external
 correctness driver may impose. See .claude/skills/verify/SKILL.md.
 
-Sharded: a monolithic sweep of the catalog (then 162 entries) once
+Sharded: a monolithic sweep of the 162-entry catalog once
 overran a 900 s subprocess timeout on a contended host, and its single
 timeout aborted the whole suite under ``-x``. Four round-robin shards
 (sorted names striped) each get their own subprocess and timeout; a

@@ -13,6 +13,7 @@ from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from weather_data_pipeline_sv_spark.functions.rounding import rnd
+from weather_data_pipeline_sv_spark.operators import dedup as dd
 
 SET = settings(max_examples=10, deadline=None)
 
@@ -52,6 +53,17 @@ def test_idw_weighted_mean_within_bounds(spark, pairs):
 
 
 @SET
+@given(st.lists(st.text(alphabet="abcdef ", min_size=10, max_size=60),
+                min_size=2, max_size=8))
+def test_jaccard_values_bounded(spark, texts):
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    rows = dd.jaccard_pairs(df, "doc_id", "text", n=2, threshold=0.0).collect()
+    for r in rows:
+        assert 0.0 < r["jaccard"] <= 1.0 + 1e-12
+        assert r["doc_a"] < r["doc_b"]
+
+
+@SET
 @given(st.lists(finite, min_size=1, max_size=50), st.integers(0, 6))
 def test_rounding_close_and_idempotent(spark, xs, n):
     df = spark.createDataFrame([(x,) for x in xs], "x double")
@@ -62,6 +74,16 @@ def test_rounding_close_and_idempotent(spark, xs, n):
     for r in out:
         assert abs(r["r"] - r["x"]) <= tol
         assert r["rr"] == r["r"]  # idempotent
+
+
+@SET
+@given(st.lists(st.text(alphabet="abcxyz ", min_size=1, max_size=40),
+                min_size=1, max_size=6))
+def test_simhash_halves_fit_32_bits(spark, texts):
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    for r in dd.simhash(df, "doc_id", "text").collect():
+        assert 0 <= r["simhash_hi"] < 2**32
+        assert 0 <= r["simhash_lo"] < 2**32
 
 
 def test_quality_score_bounds_on_real_pipeline(spark, sf_dir):

@@ -1,17 +1,79 @@
-"""Property tests for the round-2 surfaces: shoelace-centroid invariants
-and retry/cron contracts."""
+"""Property tests for the round-2 surfaces: engine-portable band sizing,
+packed-vote SimHash equivalence against an independent reference
+implementation, shoelace-centroid invariants, and retry/cron contracts."""
 
 from __future__ import annotations
 
 import datetime as dt
+import hashlib
 import math
 
+import duckdb
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from weather_data_pipeline_sv_spark.catalog.vector import _V8_BS_SQL, _v8_band_size
 from weather_data_pipeline_sv_spark.plans.scheduler import CronSchedule
 from weather_data_pipeline_sv_spark.sources import retry as rt
+
+
+# ---------------------------------------------------------------------------
+# v8 band sizing: the Python chain and the SQL CASE must agree everywhere
+# ---------------------------------------------------------------------------
+
+@given(st.integers(min_value=0, max_value=3_000_000))
+@settings(max_examples=200, deadline=None)
+def test_band_size_python_sql_equivalence(n):
+    sql = duckdb.query(
+        f"SELECT {_V8_BS_SQL} FROM (SELECT {n} AS n)"
+    ).fetchone()[0]
+    assert sql == _v8_band_size(n)
+
+
+def test_band_size_monotone():
+    sizes = [_v8_band_size(n) for n in range(0, 1_000_000, 997)]
+    assert sizes == sorted(sizes)
+    assert sizes[0] == 4 and sizes[-1] <= 16
+
+
+# ---------------------------------------------------------------------------
+# SimHash packed-vote aggregation == independent per-doc reference
+# ---------------------------------------------------------------------------
+
+def _ref_simhash(text: str) -> tuple[int, int]:
+    """Straight-line reference: md5 per token, +1/-1 votes per bit."""
+    toks = text.strip().lower().split()
+    votes_hi, votes_lo = [0] * 32, [0] * 32
+    for t in toks:
+        h = hashlib.md5(t.encode()).hexdigest()
+        hi, lo = int(h[:8], 16), int(h[8:16], 16)
+        for b in range(32):
+            votes_hi[b] += 1 if (hi >> b) & 1 else -1
+            votes_lo[b] += 1 if (lo >> b) & 1 else -1
+    sig_hi = sum(1 << b for b in range(32) if votes_hi[b] > 0)
+    sig_lo = sum(1 << b for b in range(32) if votes_lo[b] > 0)
+    return sig_hi, sig_lo
+
+
+def test_simhash_matches_reference_impl(spark):
+    from weather_data_pipeline_sv_spark.operators.dedup import simhash
+
+    docs = [
+        (0, "the quick brown fox jumps over the lazy dog"),
+        (1, "the quick brown fox jumps over the lazy cat"),
+        (2, "completely different content entirely here now"),
+        (3, "single"),
+        (4, "repeat repeat repeat repeat repeat"),
+        (5, "  leading and   irregular   whitespace  "),
+    ]
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    got = {
+        r["doc_id"]: (r["simhash_hi"], r["simhash_lo"])
+        for r in simhash(df, "doc_id", "text").collect()
+    }
+    for doc_id, text in docs:
+        assert got[doc_id] == _ref_simhash(text), f"doc {doc_id}"
 
 
 # ---------------------------------------------------------------------------

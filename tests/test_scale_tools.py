@@ -1,6 +1,10 @@
-"""tools/make_scaled_dir.py: the embeddings copies keep vec_id dense and
-keep every intra-copy cosine (copy 0 untouched, vec_id shifted by
-i*(max+1), a per-(copy, dim) hash sign flip for i > 0).
+"""The two scaled-corpus generators must agree: the crossover tool's
+single-branch posexplode recipe (``tools/make_embeddings_dir``) is a
+re-implementation of ``tools/make_scaled_dir``'s per-copy unionAll for
+embeddings only — copy 0 untouched, vec_id shifted by i*(max+1), a
+per-(copy, dim) hash sign flip for i > 0. If the recipes diverge, the
+v10/v12 crossover artifact measures a different corpus than the
+three-point curve dirs (data_sf1/data_sf3) and the comparison is void.
 """
 
 from __future__ import annotations
@@ -16,6 +20,7 @@ sys.path.insert(
     os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"),
 )
 
+from make_embeddings_dir import scaled_embeddings
 from make_scaled_dir import scaled_copies
 
 FACTOR = 3
@@ -28,12 +33,20 @@ def _rows(df):
     }
 
 
+def test_recipes_identical(spark, sf_dir):
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    a = _rows(scaled_copies("embeddings", emb, FACTOR))
+    b = _rows(scaled_embeddings(emb, FACTOR))
+    assert a == b
+
+
 def test_scaled_ids_dense_and_cosines_preserved(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     n = emb.count()
-    out = scaled_copies("embeddings", emb, FACTOR)
+    out = scaled_embeddings(emb, FACTOR)
     ids = [r[0] for r in out.select("vec_id").collect()]
-    # dense 0..K*n-1
+    # dense 0..K*n-1 — the _dense_count precondition the semantic-dedup
+    # sizing relies on
     assert sorted(ids) == list(range(FACTOR * n))
     # the sign flip is orthogonal: intra-copy cosine of (0, 1) equals the
     # intra-copy cosine of their images in every copy
@@ -48,3 +61,32 @@ def test_scaled_ids_dense_and_cosines_preserved(spark, sf_dir):
     base = cos(rows[0], rows[1])
     for i in range(1, FACTOR):
         assert abs(cos(rows[i * n], rows[i * n + 1]) - base) < 1e-6
+
+
+def test_clustered_emb_generator_deterministic_and_unit_norm():
+    """tools/make_clustered_emb_dir.py: bit-reproducible (seeded single
+    Generator, fixed draw order), unit-norm float32, dup families
+    inherit the parent's cluster label, and near-dup pairs actually sit
+    at near-dup cosine (the structure RECALL_CLUSTERED.json's margins
+    depend on)."""
+    import numpy as np
+
+    from make_clustered_emb_dir import clustered_embeddings
+
+    x1, l1 = clustered_embeddings(2000, 32, 0.08, dim=16)
+    x2, l2 = clustered_embeddings(2000, 32, 0.08, dim=16)
+    assert np.array_equal(x1, x2) and np.array_equal(l1, l2)
+    assert x1.dtype == np.float32 and l1.dtype == np.int32
+    norms = np.linalg.norm(x1.astype(np.float64), axis=1)
+    assert np.allclose(norms, 1.0, atol=1e-5)
+    # clusters are real: mean within-label cosine far above global mean
+    sims = x1 @ x1.T
+    same = l1[:, None] == l1[None, :]
+    off = ~np.eye(len(x1), dtype=bool)
+    within = sims[same & off].mean()
+    overall = sims[off].mean()
+    assert within > overall + 0.3
+    # near-dup families exist: a meaningful share of best-neighbor
+    # cosines is >= 0.95 (sigma_dup=0.03 perturbations)
+    np.fill_diagonal(sims, -1)
+    assert (sims.max(axis=1) >= 0.95).mean() > 0.15

@@ -2,7 +2,7 @@
 across micro-batches AND query restarts.
 
 Uses Structured Streaming's stateful ``dropDuplicates`` on the normalized
-content hash (md5 of the trimmed, lower-cased text), with
+content hash (the same identity as operators/dedup.exact_duplicates), with
 state in the checkpoint: a duplicate arriving in a later batch — or after
 a restart — is dropped. State is one entry per distinct hash; production
 streams bound it with ``dropDuplicatesWithinWatermark`` when late

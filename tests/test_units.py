@@ -271,3 +271,25 @@ def test_scd2_history_collapses_and_versions(spark):
         (1, 3): ("A2", 4, None, True), # ord=14 beat ord=13 at t=4
         (2, 1): ("X", 1, None, True),
     }
+
+
+def test_quantize_int8_roundtrip_bounds(spark):
+    from weather_data_pipeline_sv_spark.operators.similarity import (
+        quantization_report, quantize_int8,
+    )
+    import pyspark.sql.functions as F
+
+    rows = [
+        (0, [1.0, -0.5, 0.25, 127.0]),
+        (1, [0.0, 0.0, 0.0, 0.0]),        # zero vector must stay finite
+        (2, [-3.5, 2.0, 1e-9, 0.75]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, emb array<double>")
+    q = quantize_int8(df).collect()
+    for r in q:
+        assert all(abs(v) <= 127 for v in r["q"])       # int8 range
+        for orig, deq in zip(rows[r["vec_id"]][1], r["deq"]):
+            assert abs(orig - deq) <= r["q_scale"] / 2 + 1e-12  # ½-step bound
+    rep = {r["vec_id"]: r for r in quantization_report(df).collect()}
+    assert rep[0]["cosine_deq"] > 0.999   # 8-bit keeps direction
+    assert rep[1]["mae"] == 0.0           # zero vector reconstructs exactly

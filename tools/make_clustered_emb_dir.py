@@ -29,9 +29,10 @@ at each rank is an artifact, not an assumption.
 Everything derives from ONE seeded numpy Generator in a fixed draw
 order, so the corpus is bit-reproducible ON A GIVEN NUMPY VERSION —
 numpy only guarantees Generator stream stability within a version
-(NEP 19), which is why `data_embclust` is COMMITTED while the weather
-dirs (md5/Spark-expression derived, engine-stable) are regenerate-
-on-demand (.gitignore note). Vectors are float32 and unit-norm,
+(NEP 19): a corpus regenerated under another numpy version may differ,
+unlike the weather dirs (md5/Spark-expression derived, engine-stable).
+The ``data_embclust`` behind the recorded measurements is in the git
+history (last present at commit 6e256a2), not in the tree. Vectors are float32 and unit-norm,
 schema-identical to the driver's embeddings.parquet
 (vec_id int64, embedding list<float>, label int32 = cluster id — the
 label doubles as ground truth for cluster-structure sanity checks;

@@ -15,8 +15,8 @@ the 50 km spatial fan-out, and the gold group-by — while the postal dim
 stays reference-shaped (broadcastable), which is exactly the production
 growth pattern.
 
-Determinism: every value is an expression of the row id via an md5
-variate (``hash_uniform`` below) — no rand(), no wall clock;
+Determinism: every value is an expression of the row id via the md5
+variate (operators/sampling.hash_uniform) — no rand(), no wall clock;
 regenerating a dir is bit-identical. Timestamps are NTZ anchored at a
 fixed literal; the companion bench derives asof = BASE + days*24 h, so
 the 168 h lookback window always covers the last 7 days of data.
@@ -42,20 +42,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from weather_data_pipeline_sv_spark.operators.sampling import hash_uniform
 from weather_data_pipeline_sv_spark.plans import schemas
 from weather_data_pipeline_sv_spark.session import get_spark
 
 BASE_TS = "2026-01-01 00:00:00"
 LAT0, LAT_SPAN = 51.5, 2.0
 LON0, LON_SPAN = 11.0, 4.0
-
-
-def hash_uniform(key: F.Column, salt: str) -> F.Column:
-    """Deterministic U[0,1) from a key column: the first 32 bits of
-    md5(salt:key) over 2^32."""
-    h = F.md5(F.concat(F.lit(salt), F.lit(":"), key.cast("string")))
-    u32 = F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint")
-    return u32 / F.lit(4294967296.0)
 
 
 def _u(salt: str) -> F.Column:

@@ -9,8 +9,8 @@ Postgres/PostGIS + Airflow weather ETL), per ``SURVEY.md``:
 - IDW spatial aggregation to postal-code x hour grain (``plans/aggregation.py``)
 - serving queries (``plans/queries.py``)
 - merge-by-key writers replacing ON CONFLICT upserts (``operators/merge.py``)
-- an oracle-checked query catalog of the relational shapes the pipeline is
-  built from (``catalog/``)
+- large-scale training-data operators: dedup, similarity search, text
+  analysis, multimodal plumbing (``operators/``, ``functions/``)
 
 Everything is declarative DataFrame API + built-in functions; no Python UDFs
 in the core hot path, so Catalyst/Tungsten handle pushdown, pruning,

@@ -38,7 +38,20 @@ def register(name: str, oracle: str | None = None):
 
 def load_all() -> None:
     """Import every catalog module so its queries register."""
-    from . import composite, core, extras, weatherlike  # noqa: F401
+    from . import (  # noqa: F401
+        composite,
+        core,
+        extras,
+        hybrid,
+        multimodal,
+        text,
+        text_bpe_sketch,
+        text_chunks,
+        text_dedup,
+        text_retrieval,
+        vector,
+        weatherlike,
+    )
 
 
 def all_queries():

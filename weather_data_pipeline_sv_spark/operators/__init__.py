@@ -4,12 +4,19 @@ Modules (each documents its own 100 TB design rationale):
 
 - ``merge``       — merge-by-key upsert writers (update-wins / first-wins /
                     partial-column), the ON CONFLICT replacement
+- ``dedup``       — exact / n-gram Jaccard / MinHash+LSH / SimHash text
+                    dedup with stop-shingle skew guards
+- ``graph``       — connected components (near-dup cluster closure)
+- ``similarity``  — brute-force cosine, hyperplane-LSH ANN, IVF ANN,
+                    embedding near-dup pairs, corpus-scaled param helpers
+- ``multimodal``  — binary payload columns + Arrow-batched decode/feature/
+                    frame/RMS operators (codecs import-gated)
 - ``spatial``     — grid-bucketed range join (equi-join re-expression of
                     ST_DWithin for two large sides)
 - ``asof``        — backward as-of join via union + carry-forward window
 - ``timeseries``  — hourly bucketing, gap-fill + forward fill, rollup
                     cascade partials/reaggregation
-- ``quantiles``   — exact interpolated quantiles from a count-by-value
-                    histogram (bounded shuffled state)
 - ``skew``        — salted two-phase aggregation and replicate joins
+- ``sampling``    — deterministic hash sampling / stratified mixing /
+                    train-val-test splits
 """
